@@ -170,6 +170,55 @@ def dir_usage(root: Path) -> tuple[int, int]:
     return n_bytes, n_files
 
 
+class HostSteal:
+    """Share of this machine's CPU time that its hypervisor gave to other
+    guests since the last reading (the `steal` column of /proc/stat). It
+    is logged beside each operation: on a shared VM it is the main reason
+    the same operation's wall time moves from run to run."""
+
+    def __init__(self) -> None:
+        self._last = self._read()
+
+    @staticmethod
+    def _read() -> tuple[int, int]:
+        with open("/proc/stat") as f:
+            ticks = [int(x) for x in f.readline().split()[1:]]
+        return sum(ticks), ticks[7]
+
+    def since_last(self) -> float:
+        total, steal = self._read()
+        d_total, d_steal = total - self._last[0], steal - self._last[1]
+        self._last = (total, steal)
+        return 100 * d_steal / d_total if d_total else 0.0
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process, its live
+    descendants (the Spark JVM, the pyspark daemon and its workers) and the
+    children they have reaped. Time the hypervisor gave to other guests is
+    not in it."""
+    children: dict[int, list[int]] = defaultdict(list)
+    ticks: dict[int, int] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process ended while we listed /proc
+            continue
+        pid = int(entry)
+        children[int(fields[1])].append(pid)
+        # utime, stime, cutime, cstime
+        ticks[pid] = sum(int(x) for x in fields[11:15])
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo.extend(children[pid])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def jvm_peak_rss_mb(spark) -> float:
     """Peak resident set of the driver JVM (VmHWM), in MiB."""
     pid = spark.sparkContext._gateway.proc.pid

@@ -31,11 +31,12 @@ from tabiya_livelihoods_classifier_spark.streaming.incremental_er import (
     incremental_er_update,
 )
 
-from spans import dir_usage, log
+from spans import HostSteal, dir_usage, log, tree_cpu_s
 
 TAXONOMY_ENTITIES = 1700
 MIN_F1 = 0.99
-# a read takes well under a second; its latency is the median of this many
+# a read takes well under a second; a traced run reports the median of this
+# many (state_read_s), an untimed run reads once for its checks
 READS = 5
 # incremental_fold corpus: one tenth of the `bench` corpus (5000
 # conversations over 1700 entities). Entities with id % DELTA_STRIDE < 8
@@ -50,10 +51,11 @@ def _median(rows: list[dict], key: str) -> float:
     return statistics.median(r[key] for r in rows)
 
 
-def _timed_reads(read) -> tuple[list, float]:
-    """Rows of the last of READS reads, and the median read time."""
+def _timed_reads(b, read) -> tuple[list, float]:
+    """Rows of the last read, and the median read time (READS reads in a
+    traced run, one otherwise)."""
     times = []
-    for _ in range(READS):
+    for _ in range(READS if b.trace else 1):
         t = perf_counter()
         rows = [tuple(r) for r in read().collect()]
         times.append(perf_counter() - t)
@@ -93,20 +95,25 @@ def small_batches(b) -> None:
     b.setup_extra_s = perf_counter() - t0
 
     jobs: list[dict] = []
+    steal = HostSteal()
 
     def run_job(i: int) -> dict:
         turns, gold = generate_transcripts("s", b.seed * 1000 + i)
         out = b.work / f"job-{i}"
         name = f"job-{i}"
         b.attempted += 1
+        steal.since_last()
+        cpu = tree_cpu_s()
         with b.counter.group(name):
             t = perf_counter()
             _er_job(spark, turns, taxo, out)
             wall = perf_counter() - t
-        log(f"{name}: {wall:.2f}s")
-        row = {"wall": wall, "turns": len(turns), **b.counter.counts(name)}
+        cpu = tree_cpu_s() - cpu
+        row = {"wall": wall, "cpu": cpu, "steal": steal.since_last(),
+               "turns": len(turns), **b.counter.counts(name)}
+        log(f"{name}: {wall:.2f}s, {cpu:.1f} CPU s, host steal {row['steal']:.1f}%")
         row["storage.bytes_written"], row["storage.files_written"] = dir_usage(out)
-        clusters, row["read"] = _timed_reads(lambda: spark.read.parquet(str(out / "clusters")))
+        clusters, row["read"] = _timed_reads(b, lambda: spark.read.parquet(str(out / "clusters")))
         row.update(_check_clusters(b, name, clusters, gold))
         if not row["ok"]:
             b.failed += 1
@@ -151,26 +158,31 @@ def incremental_fold(b) -> None:
 
     folds: list[dict] = []
     folded = [base]
+    steal = HostSteal()
 
     def run_fold(k: int) -> dict | None:
         name = f"fold-{k}"
         b.attempted += 1
         timings: dict = {}
         before = dir_usage(state_dir)
+        steal.since_last()
+        cpu = tree_cpu_s()
         try:
             with b.counter.group(name):
                 t = perf_counter()
                 report = incremental_er_update(spark, store, to_df(deltas[k]), timings=timings)
                 wall = perf_counter() - t
+            cpu = tree_cpu_s() - cpu
         except StopSetDriftError as exc:
             b.failed += 1
             b.fail(f"{name}: {exc}")
             return None
-        log(f"{name}: {wall:.2f}s")
+        stolen = steal.since_last()
+        log(f"{name}: {wall:.2f}s, {cpu:.1f} CPU s, host steal {stolen:.1f}%")
         folded.append(deltas[k])
         after = dir_usage(state_dir)
         return {
-            "wall": wall, "turns": len(deltas[k]), **b.counter.counts(name),
+            "wall": wall, "cpu": cpu, "steal": stolen, "turns": len(deltas[k]), **b.counter.counts(name),
             "storage.bytes_written": after[0] - before[0],
             "storage.files_written": after[1] - before[1],
             "incremental.rescore_sigs": report["n_rescore_sigs"],
@@ -196,7 +208,7 @@ def incremental_fold(b) -> None:
 
     # the folded state through the overlay chain
     b.attempted += 1
-    state, read_s = _timed_reads(store.clusters)
+    state, read_s = _timed_reads(b, store.clusters)
 
     # untimed batch recompute over base + every folded delta, which the
     # fold must equal row for row. The reference is oracle_pipeline, the
